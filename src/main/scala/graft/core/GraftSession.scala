@@ -9,10 +9,18 @@ import graft.functions._
   * `spark.sql(...)` as well as the Scala API. */
 object GraftSession {
 
+  /** Hadoop `file:` scheme registrations for both filesystem APIs: the
+    * fork-free local filesystem of [[ForkFreeRawLocalFileSystem]]. Checkpoints
+    * and output on any other scheme (`hdfs:`, `s3a:`, ...) are unaffected. */
+  val localFsConfs: Map[String, String] = Map(
+    "spark.hadoop.fs.file.impl" -> classOf[ForkFreeLocalFileSystem].getName,
+    "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[ForkFreeLocalFs].getName)
+
   /** Recommended session for local[N]; on a cluster the same confs apply
     * with shuffle partitions sized to ~2-3x total cores. */
   def builder(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession.Builder =
     SparkSession.builder()
+      .config(localFsConfs)
       .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

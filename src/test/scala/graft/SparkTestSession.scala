@@ -8,6 +8,9 @@ object SparkTestSession {
     val s = SparkSession.builder()
       .master("local[4]")
       .appName("graft-test")
+      // the local filesystem GraftSession.builder registers, so checkpointed
+      // specs run on what users get
+      .config(graft.core.GraftSession.localFsConfs)
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.warehouse.dir",

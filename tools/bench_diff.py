@@ -30,7 +30,8 @@ def main():
     tb = ta = 0.0
     for n in names:
         b, a = bq.get(n, -1), aq.get(n, -1)
-        if b is None or a is None or b < 0 or a < 0:
+        # a missing reading, or an after-time rounded to 0.000, has no ratio
+        if b is None or a is None or b < 0 or a <= 0:
             print(f"| {n} | {b} | {a} | n/a |")
             continue
         tb += b
