@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import graft.core.GraftSession
 
 /** Benchmark main — one JSON line on stdout, per the driver contract.
   *
@@ -366,7 +367,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = GraftSession.localCores
     val memoNames = memoBuilds.map(_._1)
     // optional args restrict the run to the named queries (targeted timing
     // during optimization); the driver's full run passes no args. Unknown
@@ -452,19 +453,7 @@ object Bench {
         f"$loadThreshold%.1f (cpus/8) - machine is contended; timings " +
         "will be inflated. Flagging \"contended\":true and using min-of-3.")
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      // see GraftSession; env-overridable for A/B profiling runs only
-      .config("spark.memory.storageFraction",
-        sys.env.getOrElse("SPARK_GRAFT_STORAGE_FRACTION", "0.3"))
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.maxPlanStringLength", "4194304")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cpus)
 
     val memoFns = memoBuilds.toMap
     def force(name: String): Unit = memoFns.get(name) match {

@@ -1,19 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.core.GraftSession
 
 /** Drives the driver's t1 smoke exactly: SparkEntry.entry(spark) on sf0.001,
   * checks rows > 0, prints the result. */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.maxPlanStringLength", "4194304")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     val df = SparkEntry.entry(spark)
     val n = df.count()
     df.show(5, truncate = false)

@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.core.GraftSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -7,16 +7,7 @@ object Verify {
   def main(args: Array[String]): Unit = {
     // driver contract: (sfDir, outDir). Extra args = dev-loop query filter.
     val Array(sfDir, outDir, only @ _*) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.memory.storageFraction", "0.3") // see GraftSession
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.maxPlanStringLength", "4194304")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     new java.io.File(outDir).mkdirs()
     // A failing query must be LOUD in the artifact, not a silent omission:
     // every declared query either writes its parquet or contributes a row to

@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.GraftBridge
 import graft.functions._
 
-/** Engine entrypoint: a tuned SparkSession builder plus SQL registration of
+/** Engine entrypoint: the one SparkSession factory plus SQL registration of
   * graft's native expressions, so the whole surface is reachable from
   * `spark.sql(...)` as well as the Scala API. */
 object GraftSession {
@@ -16,15 +16,18 @@ object GraftSession {
     "spark.hadoop.fs.file.impl" -> classOf[ForkFreeLocalFileSystem].getName,
     "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[ForkFreeLocalFs].getName)
 
-  /** Recommended session for local[N]; on a cluster the same confs apply
-    * with shuffle partitions sized to ~2-3x total cores. */
-  def builder(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession.Builder =
+  /** Cores of a local session: `SPARK_GRAFT_CPUS` when set, else every
+    * available processor. */
+  def localCores: Int =
+    sys.env.get("SPARK_GRAFT_CPUS").fold(Runtime.getRuntime.availableProcessors())(_.trim.toInt)
+
+  /** The only session builder: every main, the test session and the
+    * benchmark start here. On a cluster the same confs apply with shuffle
+    * partitions sized to ~2-3x total cores. */
+  def builder(cores: Int = localCores): SparkSession.Builder =
     SparkSession.builder()
       .config(localFsConfs)
       .config("spark.sql.shuffle.partitions", cores.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       // cache-heavy pipelines (the session memos hold pairs-scale
       // checkpoint blocks while graph loops aggregate): shrink the
@@ -35,6 +38,18 @@ object GraftSession {
       // AGGREGATE_OUT_OF_MEMORY at the default 0.5 with the 29M-pair memo
       // resident; green at 0.3)
       .config("spark.memory.storageFraction", "0.3")
+      // Spark stringifies every execution's plan for its listeners; the
+      // iterative graph queries nest cached adaptive plans deeply enough
+      // that the UNBOUNDED default can build a multi-GB string and run the
+      // JVM out of memory. 4 MB is far above any plan PlanAuditSpec inspects.
+      .config("spark.sql.maxPlanStringLength", (4 * 1024 * 1024).toString)
+
+  /** A `local[cores]` session from [[builder]], logging at WARN. */
+  def local(cores: Int = localCores): SparkSession = {
+    val spark = builder(cores).master(s"local[$cores]").getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
 
   /** Register graft's native expressions as SQL functions:
     * graft_minhash(text, n, k), graft_shingles(text, n),

@@ -1,7 +1,7 @@
 package graft.state
 
-import org.apache.spark.sql.{Dataset, Encoder, Encoders}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.{Dataset, Encoder}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.core.Message
 
 /** Per-key durable state facade — the reference's "table" surface
@@ -107,23 +107,6 @@ object GraftTableApp {
       }
   }
 
-  /** [[transform]] on Spark 4's transformWithState / StatefulProcessor —
-    * the successor API to flatMapGroupsWithState (SPARK-46815) and the
-    * recommended target for new stateful pipelines: typed named state
-    * slots, TTL support, and the state-v2 store format. Semantics are
-    * identical to [[transform]] (same ordering contract, same
-    * read-your-writes [[TableTransaction]]); TableAppSpec asserts
-    * output-equality between the two backends. */
-  def transformModern[OUT: Encoder](input: Dataset[Message],
-      maxKeyBatch: Int = MaxKeyBatchRows)(
-      appFn: TableTransaction => IterableOnce[OUT]): Dataset[OUT] = {
-    import input.sparkSession.implicits._
-    input
-      .groupByKey(_.key)
-      .transformWithState(new TableProcessor[OUT](appFn, maxKeyBatch),
-        TimeMode.None(), OutputMode.Append())
-  }
-
   /** T2 — the multi-message variant (reference: fluvii/apps/
     * fluvii_multi_msg_app.py:7-21): the user function sees a transaction
     * batch at once for bulk processing. The input is repartitioned by
@@ -141,36 +124,5 @@ object GraftTableApp {
     input.repartition(col("partition"))
       .sortWithinPartitions(col("partition"), col("offset"))
       .mapPartitions(_.grouped(maxBatch).flatMap(batch => bulkFn(batch).iterator))
-  }
-}
-
-/** StatefulProcessor backing [[GraftTableApp.transformModern]]: one named
-  * ValueState slot ("table") holding the JSON document, no TTL — the same
-  * per-key contract as the GroupState path, expressed in the state-v2 API. */
-private[state] final class TableProcessor[OUT](
-    appFn: TableTransaction => IterableOnce[OUT],
-    maxKeyBatch: Int = GraftTableApp.MaxKeyBatchRows)
-    extends StatefulProcessor[String, Message, OUT] {
-
-  @transient private var store: ValueState[String] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    store = getHandle.getValueState[String]("table", Encoders.STRING, TTLConfig.NONE)
-
-  override def handleInputRows(key: String, rows: Iterator[Message],
-      timers: TimerValues): Iterator[OUT] = {
-    val sorted = GraftTableApp.sortedBounded(key, rows, maxKeyBatch)
-    var cur: Option[String] = if (store.exists()) Some(store.get()) else None
-    val out = Seq.newBuilder[OUT]
-    sorted.foreach { m =>
-      val txn = new TableTransaction(m, cur)
-      out ++= appFn(txn)
-      cur = txn.resultingState
-    }
-    cur match {
-      case Some(v) => store.update(v)
-      case None    => if (store.exists()) store.clear()
-    }
-    out.result().iterator
   }
 }

@@ -1,16 +1,13 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.core.GraftSession
 
 /** Dev tool: dump formatted physical plans of selected queries for the
   * scale review (pushdown reaching scans, broadcasts chosen, shuffle
   * counts). Usage: runMain graft.tools.Explain [queryName ...] */
 object Explain {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.maxPlanStringLength", "4194304").getOrCreate()
+    val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("ERROR")
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val names = if (args.nonEmpty) args.toSeq else graft.Bench.headline

@@ -1,6 +1,7 @@
 package graft.tools
 
 import org.apache.spark.sql.SparkSession
+import graft.core.GraftSession
 
 /** Ad-hoc profiler: `sbt "runMain graft.tools.Scratch q09_semi_join ..."`
   * times each named SparkEntry query at sf0.1 (noop-forced, 2 runs) and
@@ -9,15 +10,7 @@ object Scratch {
   def main(args: Array[String]): Unit = {
     val verbose = args.contains("-v")
     val names = args.filterNot(_.startsWith("-")).toSeq
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.memory.storageFraction", "0.3") // see GraftSession
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.maxPlanStringLength", "4194304").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     // -safe: run under the cluster-safe checkpoint policy (reliable
     // checkpoint() into target/ckpt_scratch) — for measuring the
     // write+read overhead the flag costs at a given corpus size

@@ -1,7 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.core.GraftSession
 
 /** Scale rehearsal: amplify the sf0.1 corpus N-fold (fresh doc/vec ids, a
   * per-copy marker token so copies are near- rather than exact duplicates)
@@ -45,15 +46,7 @@ object Stress {
     val exactCopies = flagArgs.nonEmpty
     val src = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val out = if (exactCopies) "target/stress_exact" else "target/stress"
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.memory.storageFraction", "0.3") // see GraftSession
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.maxPlanStringLength", "4194304").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
 
     def amplify(df: DataFrame, idCol: String, textCol: Option[String]): DataFrame = {
       val span = df.agg(max(col(idCol))).first().getLong(0) + 1

@@ -242,12 +242,7 @@ object ToolboxCli {
       case "topics" :: ("consume" | "produce") :: _ => true
       case _                                        => false
     }
-    val spark =
-      if (needsSpark) Some(org.apache.spark.sql.SparkSession.builder()
-        .master("local[4]").appName("graft-toolbox")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.maxPlanStringLength", "4194304").getOrCreate())
-      else None
+    val spark = if (needsSpark) Some(graft.core.GraftSession.local()) else None
     println(run(args, new InMemoryAdmin, spark))
     spark.foreach(_.stop())
   }

@@ -1,31 +1,35 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import graft.core.GraftSession
 
 /** One shared local session for the whole test JVM (suites reuse it). */
 object SparkTestSession {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
+    val s = GraftSession.builder(4).master("local[4]")
       .appName("graft-test")
-      // the local filesystem GraftSession.builder registers, so checkpointed
-      // specs run on what users get
-      .config(graft.core.GraftSession.localFsConfs)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft_wh").toString)
-      .config("spark.ui.enabled", "false")
-      // Spark stringifies every execution's plan for its listeners; the
-      // iterative graph queries nest cached adaptive plans deeply enough
-      // that the UNBOUNDED default can build a multi-GB string and OOM the
-      // shared test JVM (observed in the full-suite run). 4 MB is far above
-      // any plan the PlanAuditSpec pins inspect and is the same guard a
-      // production driver runs with.
-      .config("spark.sql.maxPlanStringLength", (4 * 1024 * 1024).toString)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }
   val sf0001 = "/root/testdata/sf0.001"
+
+  /** The state store the `transformWithState` streams need. */
+  val rocksDbStateStore: (String, String) =
+    "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
+  /** Runs `body` with the session confs `kv` set, then restores each key's
+    * previous value, or unsets it if it had none. */
+  def withConfs[T](kv: (String, String)*)(body: => T): T = {
+    val prev = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None)    => spark.conf.unset(k)
+    }
+  }
 }

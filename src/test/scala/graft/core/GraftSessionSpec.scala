@@ -2,8 +2,47 @@ package graft.core
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestSession.spark
+import scala.jdk.CollectionConverters._
 
 class GraftSessionSpec extends AnyFunSuite {
+
+  test("the test session runs every conf GraftSession.builder sets") {
+    // the builder's pending options (a public accessor on the JVM class,
+    // protected in Scala); an empty or unreadable map fails below
+    val b = GraftSession.builder(4)
+    val set = b.getClass.getMethod("options").invoke(b)
+      .asInstanceOf[scala.collection.mutable.Map[String, String]].toMap
+    assert(set.get("spark.sql.shuffle.partitions").contains("4"))
+    assert(set.get("spark.sql.maxPlanStringLength").contains((4 * 1024 * 1024).toString))
+    assert(GraftSession.localFsConfs.toSet.subsetOf(set.toSet))
+    set.foreach { case (k, v) =>
+      assert(spark.conf.getOption(k).contains(v), s"$k: test session differs from builder")
+    }
+  }
+
+  test("AQE flags resolve on and file: resolves to the fork-free filesystem") {
+    Seq("spark.sql.adaptive.enabled",
+      "spark.sql.adaptive.coalescePartitions.enabled",
+      "spark.sql.adaptive.skewJoin.enabled").foreach { k =>
+      assert(spark.conf.get(k) == "true", k)
+    }
+    val hadoopConf = spark.sessionState.newHadoopConf()
+    assert(org.apache.hadoop.fs.FileSystem.getFileSystemClass("file", hadoopConf) ==
+      classOf[ForkFreeLocalFileSystem])
+  }
+
+  test("no SparkSession is built outside GraftSession") {
+    val builderCall = java.util.regex.Pattern.compile("SparkSession\\s*\\.\\s*builder\\b")
+    val roots = Seq("src/main/scala", "src/test/scala").map(java.nio.file.Paths.get(_))
+    roots.foreach(r => assert(java.nio.file.Files.isDirectory(r), s"$r not found"))
+    val callers = roots.flatMap { r =>
+      val files = java.nio.file.Files.walk(r)
+      try files.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally files.close()
+    }.filter(f => builderCall.matcher(java.nio.file.Files.readString(f)).find())
+      .map(_.toString.replace('\\', '/'))
+    assert(callers == Seq("src/main/scala/graft/core/GraftSession.scala"))
+  }
 
   test("custom expressions are callable from SQL after registration") {
     GraftSession.registerFunctions(spark)

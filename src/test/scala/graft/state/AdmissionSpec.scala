@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 import org.scalatest.funsuite.AnyFunSuite
-import graft.SparkTestSession.{sf0001, spark}
+import graft.SparkTestSession.{rocksDbStateStore, sf0001, spark, withConfs}
 
 /** sa13 — continuous ingestion admission: fold semantics per gate, batch
   * replay vs an independent window-cumsum model, stream/batch equality on
@@ -140,11 +140,7 @@ class AdmissionSpec extends AnyFunSuite {
   }
 
   test("streaming replay over increments equals the batch run (transformWithState)") {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withConfs(rocksDbStateStore) {
       import spark.implicits._
       val docs = graft.core.Tables.documents(spark, sf0001)
         .select(col("doc_id"), col("lang"), col("source"), col("text"))
@@ -169,11 +165,6 @@ class AdmissionSpec extends AnyFunSuite {
         assert(streamed.length == batchRun.length && streamed.nonEmpty)
         streamed.zip(batchRun).foreach { case (s, b) => assert(s == b) }
       } finally q.stop()
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None    => spark.conf.unset(key)
-      }
     }
   }
 
@@ -185,11 +176,7 @@ class AdmissionSpec extends AnyFunSuite {
     // verdicts are identical and the spend is counted once, not twice.
     // The crash window is recreated literally: run the batch, then delete
     // its commits/ entry from the checkpoint before restarting.
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withConfs(rocksDbStateStore) {
       import spark.implicits._
       val ckpt = java.nio.file.Files.createTempDirectory("sa13_crash_ck").toString
       val input = MemoryStream[(Long, String, String, String)](spark)
@@ -253,77 +240,59 @@ class AdmissionSpec extends AnyFunSuite {
         assert(after == Seq((4L, false, "budget", 12L)),
           s"post-replay state diverged: $after")
       } finally q2.stop()
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None    => spark.conf.unset(key)
-      }
     }
   }
 
   test("TTL: expired spend re-opens admission (rolling-window budget)") {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val ckKey = "spark.sql.streaming.checkpoint.fileChecksum.enabled"
-    val prev = spark.conf.getOption(key)
-    val prevCk = spark.conf.getOption(ckKey)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    spark.conf.set(ckKey, "false") // see NearDupSpec's TTL deadlock note
-    // ProcessingTime mode schedules continuous cleanup batches, so
-    // processAllAvailable would never return — observe progress through a
-    // listener instead (NearDupSpec's TTL harness)
-    val seen = new java.util.concurrent.atomic.AtomicLong
-    val listener = new org.apache.spark.sql.streaming.StreamingQueryListener {
-      import org.apache.spark.sql.streaming.StreamingQueryListener._
-      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
-      override def onQueryProgress(e: QueryProgressEvent): Unit =
-        if (e.progress.name == "sa13_ttl") seen.addAndGet(e.progress.numInputRows)
-      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
-    }
-    def waitUntil(cond: => Boolean, what: String): Unit = {
-      val deadline = System.nanoTime + 120L * 1000 * 1000 * 1000
-      while (!cond && System.nanoTime < deadline) Thread.sleep(50)
-      assert(cond, s"timed out waiting for $what")
-    }
-    spark.streams.addListener(listener)
-    try {
-      import spark.implicits._
-      val input = MemoryStream[(Long, String, String, String)](spark)
-      val gated = gatedDocs(input.toDS()
-        .toDF("doc_id", "lang", "source", "text")).as[GateRow]
-      // budget 6 tokens; passText spends exactly 6 — a second arrival
-      // inside the window is over budget, but once the spend expires the
-      // counter is gone and the source re-admits
-      val q = admissionStream(gated, budget = 6L,
-          ttl = Some(java.time.Duration.ofSeconds(4))).toDF()
-        .writeStream.format("memory").queryName("sa13_ttl")
-        .outputMode(OutputMode.Append).start()
+    // checkpoint checksums off: see NearDupSpec's TTL deadlock note
+    withConfs(rocksDbStateStore,
+        "spark.sql.streaming.checkpoint.fileChecksum.enabled" -> "false") {
+      // ProcessingTime mode schedules continuous cleanup batches, so
+      // processAllAvailable would never return — observe progress through a
+      // listener instead (NearDupSpec's TTL harness)
+      val seen = new java.util.concurrent.atomic.AtomicLong
+      val listener = new org.apache.spark.sql.streaming.StreamingQueryListener {
+        import org.apache.spark.sql.streaming.StreamingQueryListener._
+        override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+        override def onQueryProgress(e: QueryProgressEvent): Unit =
+          if (e.progress.name == "sa13_ttl") seen.addAndGet(e.progress.numInputRows)
+        override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+      }
+      def waitUntil(cond: => Boolean, what: String): Unit = {
+        val deadline = System.nanoTime + 120L * 1000 * 1000 * 1000
+        while (!cond && System.nanoTime < deadline) Thread.sleep(50)
+        assert(cond, s"timed out waiting for $what")
+      }
+      spark.streams.addListener(listener)
       try {
-        input.addData((1L, "en", "s", passText))
-        waitUntil(seen.get >= 1, "doc 1 processed")
-        input.addData((2L, "en", "s", passText))
-        waitUntil(seen.get >= 2, "doc 2 processed")
-        Thread.sleep(6000) // > TTL: the source's spend expires
-        input.addData((4L, "en", "s", passText))
-        waitUntil(seen.get >= 3, "doc 4 processed")
-        val rows = spark.table("sa13_ttl")
-          .select(col("doc_id"), col("admitted"), col("reason")).collect()
-          .map(r => r.getLong(0) -> (r.getBoolean(1), Option(r.getString(2)).orNull))
-          .toMap
-        assert(rows(1L) == ((true, null)), s"doc 1: ${rows(1L)}")
-        assert(rows(2L) == ((false, "budget")), s"doc 2: ${rows(2L)}")
-        assert(rows(4L) == ((true, null)), s"doc 4 after expiry: ${rows(4L)}")
-      } finally q.stop()
-    } finally {
-      spark.streams.removeListener(listener)
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None    => spark.conf.unset(key)
-      }
-      prevCk match {
-        case Some(v) => spark.conf.set(ckKey, v)
-        case None    => spark.conf.unset(ckKey)
-      }
+        import spark.implicits._
+        val input = MemoryStream[(Long, String, String, String)](spark)
+        val gated = gatedDocs(input.toDS()
+          .toDF("doc_id", "lang", "source", "text")).as[GateRow]
+        // budget 6 tokens; passText spends exactly 6 — a second arrival
+        // inside the window is over budget, but once the spend expires the
+        // counter is gone and the source re-admits
+        val q = admissionStream(gated, budget = 6L,
+            ttl = Some(java.time.Duration.ofSeconds(4))).toDF()
+          .writeStream.format("memory").queryName("sa13_ttl")
+          .outputMode(OutputMode.Append).start()
+        try {
+          input.addData((1L, "en", "s", passText))
+          waitUntil(seen.get >= 1, "doc 1 processed")
+          input.addData((2L, "en", "s", passText))
+          waitUntil(seen.get >= 2, "doc 2 processed")
+          Thread.sleep(6000) // > TTL: the source's spend expires
+          input.addData((4L, "en", "s", passText))
+          waitUntil(seen.get >= 3, "doc 4 processed")
+          val rows = spark.table("sa13_ttl")
+            .select(col("doc_id"), col("admitted"), col("reason")).collect()
+            .map(r => r.getLong(0) -> (r.getBoolean(1), Option(r.getString(2)).orNull))
+            .toMap
+          assert(rows(1L) == ((true, null)), s"doc 1: ${rows(1L)}")
+          assert(rows(2L) == ((false, "budget")), s"doc 2: ${rows(2L)}")
+          assert(rows(4L) == ((true, null)), s"doc 4 after expiry: ${rows(4L)}")
+        } finally q.stop()
+      } finally spark.streams.removeListener(listener)
     }
   }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 import org.scalatest.funsuite.AnyFunSuite
-import graft.SparkTestSession.{sf0001, spark}
+import graft.SparkTestSession.{rocksDbStateStore, sf0001, spark, withConfs}
 import graft.operators.Windows
 
 /** ev06's continuous form: the shared-fold batch backend must equal the
@@ -20,11 +20,7 @@ class AttributionStreamSpec extends AnyFunSuite {
   }
 
   test("streaming replay over increments equals the batch run (transformWithState)") {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withConfs(rocksDbStateStore) {
       import spark.implicits._
       val events = graft.core.Tables.events(spark, sf0001)
         .select(col("user_id"), col("event_id"), col("event_type"),
@@ -50,20 +46,11 @@ class AttributionStreamSpec extends AnyFunSuite {
         assert(streamed.length == batchRun.length && streamed.length > 0)
         assert(streamed.sameElements(batchRun))
       } finally q.stop()
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None    => spark.conf.unset(key)
-      }
     }
   }
 
   test("state carries across batches: a touch in batch 1 attributes a purchase in batch 2") {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withConfs(rocksDbStateStore) {
       import spark.implicits._
       import AttributionStream.Ev
       val input = MemoryStream[Ev](spark)
@@ -84,11 +71,6 @@ class AttributionStreamSpec extends AnyFunSuite {
         assert(rows(1).getLong(0) == 3L && rows(1).isNullAt(3),
           "user 8 has no touch — unattributed")
       } finally q.stop()
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None    => spark.conf.unset(key)
-      }
     }
   }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 import org.scalatest.funsuite.AnyFunSuite
-import graft.SparkTestSession.{sf0001, spark}
+import graft.SparkTestSession.{rocksDbStateStore, sf0001, spark, withConfs}
 import graft.operators.Dedup
 
 /** dd12 — continuous near-dup dedup: semantics vs in-JVM brute force,
@@ -32,11 +32,7 @@ class NearDupSpec extends AnyFunSuite {
   }
 
   test("streaming replay over increments equals the batch run (transformWithState)") {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withConfs(rocksDbStateStore) {
       import spark.implicits._
       val docs = graft.core.Tables.documents(spark, sf0001)
         .select(col("doc_id"), col("text")).as[(Long, String)]
@@ -87,147 +83,115 @@ class NearDupSpec extends AnyFunSuite {
           .map(r => (r.getLong(0), r.getLong(1))).toSet
         assert(sc == bc)
       } finally { q.stop(); canonQ.stop() }
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None    => spark.conf.unset(key)
-      }
     }
   }
 
   test("TTL: aged-out bucket members stop matching (store bounded in time)") {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val ckKey = "spark.sql.streaming.checkpoint.fileChecksum.enabled"
-    val prev = spark.conf.getOption(key)
-    val prevCk = spark.conf.getOption(ckKey)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     // TTL state adds secondary-index column families whose per-commit file
     // fan-out deadlocks the checksum manager's fixed await pool in local
     // mode (tasks park in ChecksumCheckpointFileManager.awaitResult and the
     // first microbatch never finishes) — corruption checksums are
     // orthogonal to what this test pins, so switch them off here
-    spark.conf.set(ckKey, "false")
-    // In ProcessingTime mode the engine runs continuous cleanup batches
-    // (the TTL makes every batch schedule another), so the stream is never
-    // idle and processAllAvailable would block forever. Progress is
-    // observed through a listener counting processed input rows instead.
-    val seen = new java.util.concurrent.atomic.AtomicLong
-    val listener = new org.apache.spark.sql.streaming.StreamingQueryListener {
-      import org.apache.spark.sql.streaming.StreamingQueryListener._
-      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
-      override def onQueryProgress(e: QueryProgressEvent): Unit =
-        if (e.progress.name == "dd12_ttl") seen.addAndGet(e.progress.numInputRows)
-      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
-    }
-    def waitUntil(cond: => Boolean, what: String): Unit = {
-      val deadline = System.nanoTime + 120L * 1000 * 1000 * 1000
-      while (!cond && System.nanoTime < deadline) Thread.sleep(50)
-      assert(cond, s"timed out waiting for $what")
-    }
-    spark.streams.addListener(listener)
-    try {
-      import spark.implicits._
-      // two identical docs (guaranteed near-dups, same buckets) arriving in
-      // separate microbatches; with a 4 s retention and a 6 s gap, doc 1's
-      // fingerprints age out before doc 2 arrives -> NO candidate pair.
-      val text = "the quick brown fox jumps over the lazy dog " * 8
-      val input = MemoryStream[(Long, String)](spark)
-      val banded = bandedDocs(input.toDS().toDF("doc_id", "text"))
-      val q = candidatesStream(banded,
-          ttl = Some(java.time.Duration.ofSeconds(4))).toDF()
-        .writeStream.format("memory").queryName("dd12_ttl")
-        .outputMode(OutputMode.Append).start()
+    withConfs(rocksDbStateStore,
+        "spark.sql.streaming.checkpoint.fileChecksum.enabled" -> "false") {
+      // In ProcessingTime mode the engine runs continuous cleanup batches
+      // (the TTL makes every batch schedule another), so the stream is never
+      // idle and processAllAvailable would block forever. Progress is
+      // observed through a listener counting processed input rows instead.
+      val seen = new java.util.concurrent.atomic.AtomicLong
+      val listener = new org.apache.spark.sql.streaming.StreamingQueryListener {
+        import org.apache.spark.sql.streaming.StreamingQueryListener._
+        override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+        override def onQueryProgress(e: QueryProgressEvent): Unit =
+          if (e.progress.name == "dd12_ttl") seen.addAndGet(e.progress.numInputRows)
+        override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+      }
+      def waitUntil(cond: => Boolean, what: String): Unit = {
+        val deadline = System.nanoTime + 120L * 1000 * 1000 * 1000
+        while (!cond && System.nanoTime < deadline) Thread.sleep(50)
+        assert(cond, s"timed out waiting for $what")
+      }
+      spark.streams.addListener(listener)
       try {
-        input.addData((1L, text))
-        waitUntil(seen.get >= 1, "doc 1 processed")
-        Thread.sleep(6000) // > TTL: doc 1's bucket state expires
-        input.addData((2L, text))
-        waitUntil(seen.get >= 2, "doc 2 processed")
-        val expired = spark.table("dd12_ttl").count()
-        assert(expired == 0L, s"aged-out member still matched: $expired pairs")
-        // negative control: doc 3 arrives INSIDE doc 2's retention window
-        // and must still match it — TTL evicts by age, not wholesale
-        input.addData((3L, text))
-        waitUntil(seen.get >= 3, "doc 3 processed")
-        waitUntil(spark.table("dd12_ttl").count() > 0, "pair (2,3) emitted")
-        val pairs = spark.table("dd12_ttl").select("doc_a", "doc_b").collect()
-          .map(r => (r.getLong(0), r.getLong(1))).toSet
-        assert(pairs == Set((2L, 3L)), s"expected (2,3) only, got $pairs")
-      } finally q.stop()
-    } finally {
-      spark.streams.removeListener(listener)
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None    => spark.conf.unset(key)
-      }
-      prevCk match {
-        case Some(v) => spark.conf.set(ckKey, v)
-        case None    => spark.conf.unset(ckKey)
-      }
+        import spark.implicits._
+        // two identical docs (guaranteed near-dups, same buckets) arriving in
+        // separate microbatches; with a 4 s retention and a 6 s gap, doc 1's
+        // fingerprints age out before doc 2 arrives -> NO candidate pair.
+        val text = "the quick brown fox jumps over the lazy dog " * 8
+        val input = MemoryStream[(Long, String)](spark)
+        val banded = bandedDocs(input.toDS().toDF("doc_id", "text"))
+        val q = candidatesStream(banded,
+            ttl = Some(java.time.Duration.ofSeconds(4))).toDF()
+          .writeStream.format("memory").queryName("dd12_ttl")
+          .outputMode(OutputMode.Append).start()
+        try {
+          input.addData((1L, text))
+          waitUntil(seen.get >= 1, "doc 1 processed")
+          Thread.sleep(6000) // > TTL: doc 1's bucket state expires
+          input.addData((2L, text))
+          waitUntil(seen.get >= 2, "doc 2 processed")
+          val expired = spark.table("dd12_ttl").count()
+          assert(expired == 0L, s"aged-out member still matched: $expired pairs")
+          // negative control: doc 3 arrives INSIDE doc 2's retention window
+          // and must still match it — TTL evicts by age, not wholesale
+          input.addData((3L, text))
+          waitUntil(seen.get >= 3, "doc 3 processed")
+          waitUntil(spark.table("dd12_ttl").count() > 0, "pair (2,3) emitted")
+          val pairs = spark.table("dd12_ttl").select("doc_a", "doc_b").collect()
+            .map(r => (r.getLong(0), r.getLong(1))).toSet
+          assert(pairs == Set((2L, 3L)), s"expected (2,3) only, got $pairs")
+        } finally q.stop()
+      } finally spark.streams.removeListener(listener)
     }
   }
 
   test("TTL: expired fingerprint memory re-canonicalizes an exact copy as a fresh rep") {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val ckKey = "spark.sql.streaming.checkpoint.fileChecksum.enabled"
-    val prev = spark.conf.getOption(key)
-    val prevCk = spark.conf.getOption(ckKey)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    spark.conf.set(ckKey, "false") // see the bucket TTL test's deadlock note
-    val seen = new java.util.concurrent.atomic.AtomicLong
-    val listener = new org.apache.spark.sql.streaming.StreamingQueryListener {
-      import org.apache.spark.sql.streaming.StreamingQueryListener._
-      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
-      override def onQueryProgress(e: QueryProgressEvent): Unit =
-        if (e.progress.name == "dd12_canon_ttl") seen.addAndGet(e.progress.numInputRows)
-      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
-    }
-    def waitUntil(cond: => Boolean, what: String): Unit = {
-      val deadline = System.nanoTime + 120L * 1000 * 1000 * 1000
-      while (!cond && System.nanoTime < deadline) Thread.sleep(50)
-      assert(cond, s"timed out waiting for $what")
-    }
-    spark.streams.addListener(listener)
-    try {
-      import spark.implicits._
-      val text = "identical boilerplate page"
-      val input = MemoryStream[(Long, String)](spark)
-      // 8 s TTL: wide enough that doc 2's microbatch cannot plausibly
-      // slip past the retention window on a loaded machine (the race a
-      // 4 s TTL would invite), small enough to expire in one sleep
-      val q = canonicalStream(input.toDS().toDF("doc_id", "text"),
-          ttl = Some(java.time.Duration.ofSeconds(8))).toDF()
-        .writeStream.format("memory").queryName("dd12_canon_ttl")
-        .outputMode(OutputMode.Append).start()
+    // checkpoint checksums off: see the bucket TTL test's deadlock note
+    withConfs(rocksDbStateStore,
+        "spark.sql.streaming.checkpoint.fileChecksum.enabled" -> "false") {
+      val seen = new java.util.concurrent.atomic.AtomicLong
+      val listener = new org.apache.spark.sql.streaming.StreamingQueryListener {
+        import org.apache.spark.sql.streaming.StreamingQueryListener._
+        override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+        override def onQueryProgress(e: QueryProgressEvent): Unit =
+          if (e.progress.name == "dd12_canon_ttl") seen.addAndGet(e.progress.numInputRows)
+        override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+      }
+      def waitUntil(cond: => Boolean, what: String): Unit = {
+        val deadline = System.nanoTime + 120L * 1000 * 1000 * 1000
+        while (!cond && System.nanoTime < deadline) Thread.sleep(50)
+        assert(cond, s"timed out waiting for $what")
+      }
+      spark.streams.addListener(listener)
       try {
-        input.addData((1L, text))
-        waitUntil(seen.get >= 1, "doc 1 processed")
-        // doc 2 arrives INSIDE the retention window: member of rep 1
-        input.addData((2L, text))
-        waitUntil(seen.get >= 2, "doc 2 processed")
-        Thread.sleep(10000) // > TTL: the fingerprint memory expires
-        // doc 3 arrives after expiry: must become its OWN representative,
-        // exactly as a batch over the retention window would canonicalize
-        input.addData((3L, text))
-        waitUntil(seen.get >= 3, "doc 3 processed")
-        waitUntil(spark.table("dd12_canon_ttl").count() >= 3, "3 canon rows")
-        val rows = spark.table("dd12_canon_ttl")
-          .select("doc_id", "rep").collect()
-          .map(r => r.getLong(0) -> r.getLong(1)).toMap
-        assert(rows == Map(1L -> 1L, 2L -> 1L, 3L -> 3L), s"got $rows")
-      } finally q.stop()
-    } finally {
-      spark.streams.removeListener(listener)
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None    => spark.conf.unset(key)
-      }
-      prevCk match {
-        case Some(v) => spark.conf.set(ckKey, v)
-        case None    => spark.conf.unset(ckKey)
-      }
+        import spark.implicits._
+        val text = "identical boilerplate page"
+        val input = MemoryStream[(Long, String)](spark)
+        // 8 s TTL: wide enough that doc 2's microbatch cannot plausibly
+        // slip past the retention window on a loaded machine (the race a
+        // 4 s TTL would invite), small enough to expire in one sleep
+        val q = canonicalStream(input.toDS().toDF("doc_id", "text"),
+            ttl = Some(java.time.Duration.ofSeconds(8))).toDF()
+          .writeStream.format("memory").queryName("dd12_canon_ttl")
+          .outputMode(OutputMode.Append).start()
+        try {
+          input.addData((1L, text))
+          waitUntil(seen.get >= 1, "doc 1 processed")
+          // doc 2 arrives INSIDE the retention window: member of rep 1
+          input.addData((2L, text))
+          waitUntil(seen.get >= 2, "doc 2 processed")
+          Thread.sleep(10000) // > TTL: the fingerprint memory expires
+          // doc 3 arrives after expiry: must become its OWN representative,
+          // exactly as a batch over the retention window would canonicalize
+          input.addData((3L, text))
+          waitUntil(seen.get >= 3, "doc 3 processed")
+          waitUntil(spark.table("dd12_canon_ttl").count() >= 3, "3 canon rows")
+          val rows = spark.table("dd12_canon_ttl")
+            .select("doc_id", "rep").collect()
+            .map(r => r.getLong(0) -> r.getLong(1)).toMap
+          assert(rows == Map(1L -> 1L, 2L -> 1L, 3L -> 3L), s"got $rows")
+        } finally q.stop()
+      } finally spark.streams.removeListener(listener)
     }
   }
 

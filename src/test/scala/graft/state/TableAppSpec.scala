@@ -238,41 +238,6 @@ class TableAppSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("transformModern (transformWithState): equals transform on running balance") {
-    // the state-v2 API requires the RocksDB state store provider
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val events = BalanceApp.eventsAsMessages(spark, sf0001).collect()
-        .sortBy(_.offset)
-      val (first, second) = events.splitAt(events.length / 2)
-      val input = MemoryStream[Message](spark)
-      val out = GraftTableApp.transformModern(input.toDS())(BalanceApp.appFn)
-      val q = out.writeStream.format("memory").queryName("balance_tws_out")
-        .outputMode(OutputMode.Append).start()
-      try {
-        input.addData(first.toSeq); q.processAllAvailable()
-        input.addData(second.toSeq); q.processAllAvailable()
-        val streamed = spark.table("balance_tws_out")
-          .as[BalanceApp.BalanceUpdate].collect()
-          .map(b => (b.user_id, b.event_id) -> math.round(b.balance * 100))
-          .toMap
-        val batch = BalanceApp.runningBalanceQuery(spark, sf0001).collect()
-          .map(r => (r.getLong(0), r.getLong(1)) -> math.round(r.getDouble(2) * 100))
-          .toMap
-        assert(streamed.size == batch.size)
-        assert(streamed == batch)
-      } finally q.stop()
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None    => spark.conf.unset(key)
-      }
-    }
-  }
-
   test("transformBatch feeds bounded chunks in (partition, offset) order") {
     // 10k messages in ONE spark partition: the bulk function must see
     // bounded chunks (reference batch_consume_max_count), never the whole
